@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame
@@ -55,18 +56,34 @@ def _estimated_splits(df: DataFrame) -> int | None:
 # (verified: struct.pack equality against the createDataFrame path).
 
 
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
+
+
+def _double_sql(v: float) -> str:
+    """A DOUBLE literal: repr() + D for finite values; NaN/±Inf have no
+    literal syntax and go through Spark's special-string casts."""
+    if math.isfinite(v):
+        return repr(v) + "D"
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+
+
 def sql_scalar_literal(v) -> str:
     """Render a Python scalar as a Spark SQL literal (None/bool/int/
     float/str). Floats get the D suffix — an undecorated 0.1 parses as
-    DECIMAL and casts to a DIFFERENT double."""
+    DECIMAL and casts to a DIFFERENT double. Ints outside BIGINT raise
+    ``ValueError``."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, int):
+        if not _INT64_MIN <= v <= _INT64_MAX:
+            raise ValueError(f"integer literal outside the BIGINT range: {v}")
         return f"{v}L"
     if isinstance(v, float):
-        return repr(v) + "D"
+        return _double_sql(v)
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, (bytes, bytearray)):
@@ -74,9 +91,14 @@ def sql_scalar_literal(v) -> str:
     raise TypeError(f"unsupported literal type: {type(v)}")
 
 
+def _sql_ident(name: str) -> str:
+    """Backtick-quote an identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def doubles_sql(vals) -> str:
     """array(x1D, x2D, ...) — a double-array literal."""
-    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
+    return "array(" + ",".join(_double_sql(float(v)) for v in vals) + ")"
 
 
 def matrix_sql(mat) -> str:
@@ -87,7 +109,7 @@ def matrix_sql(mat) -> str:
 def one_row_frame(spark, **named_sql: str) -> DataFrame:
     """One-row DataFrame of SQL literal expressions over OneRowRelation
     (``SELECT <expr> AS <name>``): zero tasks per materialization."""
-    cols = ", ".join(f"{sql} AS {name}" for name, sql in named_sql.items())
+    cols = ", ".join(f"{sql} AS {_sql_ident(name)}" for name, sql in named_sql.items())
     return spark.sql(f"SELECT {cols}")
 
 
@@ -105,7 +127,7 @@ def values_frame(spark, rows, schema) -> DataFrame:
         "(" + ",".join(sql_scalar_literal(v) for v in row) + ")" for row in rows
     )
     casts = ", ".join(
-        f"CAST(c{i} AS {f.dataType.simpleString()}) AS {f.name}"
+        f"CAST(c{i} AS {f.dataType.simpleString()}) AS {_sql_ident(f.name)}"
         for i, f in enumerate(sch.fields)
     )
     anon = ", ".join(f"c{i}" for i in range(len(sch.fields)))

@@ -7,7 +7,8 @@ The plan audit's ``--lazy-all`` mode skips exactly these (auditing their
 final frame's plan would mostly print a LocalTableScan / memory-sink scan
 anyway, and paying a training loop per audit is wasted battery time).
 This tool keeps that skip-list HONEST: it builds every registered query
-at sf0.001 and reports the job-count delta attributable to construction.
+at sf0.001 and reports the jobs its construction launched outside its
+source reads.
 
     python tools/detect_eager.py          # print name -> jobs for eager ones
 
@@ -27,15 +28,15 @@ sys.path.insert(0, REPO)
 
 def builder_job_counts(spark, sf_dir: str) -> dict[str, int]:
     """name -> number of Spark jobs the builder launched during
-    construction BEYOND its batch source reads (0 = lazy).
+    construction BEYOND those its batch source reads launched (0 = lazy).
 
-    Every ``DataFrameReader`` call on a path fires one small schema/
-    listing job even for a perfectly lazy plan, so raw job counts would
-    flag the whole registry. The reader methods are counted during each
-    build and one job per read is treated as construction noise; only a
-    builder with MORE jobs than reads (training collects, sink writes,
-    a stream driven to completion) is eager. A read that launches no job
-    (explicit schema) can only under-count — never false-flags."""
+    A ``DataFrameReader`` call may fire a schema-inference/listing job
+    even for a perfectly lazy plan (or none, when the schema is given or
+    memoized by ``catalog.load_table``), so raw job counts would flag the
+    whole registry. The job-id delta across each reader call is
+    measured and exactly those jobs are subtracted; only a builder that
+    launches jobs outside its reads (training collects, sink writes, a
+    stream driven to completion) is eager."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from lithops_dataframe_spark.plans import QUERIES
@@ -47,15 +48,18 @@ def builder_job_counts(spark, sf_dir: str) -> dict[str, int]:
         # accessor to the current int value on each call
         return sc._jsc.sc().dagScheduler().nextJobId()
 
-    reads = {"n": 0}
+    reads = {"jobs": 0}
     patched = {}
 
     def wrap(method_name):
         orig = getattr(DataFrameReader, method_name)
 
         def counted(self, *a, **kw):
-            reads["n"] += 1
-            return orig(self, *a, **kw)
+            before = job_counter()
+            try:
+                return orig(self, *a, **kw)
+            finally:
+                reads["jobs"] += job_counter() - before
 
         patched[method_name] = orig
         setattr(DataFrameReader, method_name, counted)
@@ -65,7 +69,7 @@ def builder_job_counts(spark, sf_dir: str) -> dict[str, int]:
     out: dict[str, int] = {}
     try:
         for name in sorted(QUERIES):
-            before_jobs, before_reads = job_counter(), reads["n"]
+            before_jobs, before_reads = job_counter(), reads["jobs"]
             try:
                 QUERIES[name](spark, sf_dir)
             except Exception as exc:  # noqa: BLE001 - report, don't mask
@@ -73,8 +77,7 @@ def builder_job_counts(spark, sf_dir: str) -> dict[str, int]:
                 print(f"ERROR {name}: {exc}", file=sys.stderr)
                 continue
             jobs = job_counter() - before_jobs
-            nreads = reads["n"] - before_reads
-            out[name] = max(0, jobs - nreads)
+            out[name] = jobs - (reads["jobs"] - before_reads)
     finally:
         for m, orig in patched.items():
             setattr(DataFrameReader, m, orig)
