@@ -12,9 +12,17 @@ surface.
 Scale discipline applied throughout:
 - bounded dimension tables (region/nation — constant row counts) join via
   ``F.broadcast``; SF-scaling sides (customer/supplier/part/orders) carry
-  NO hint — AQE broadcasts them while they fit the threshold and falls
+  NO hint — Spark broadcasts them while they fit the threshold and falls
   back to shuffle joins at 100 TB, where a forced hint would OOM the
   executors;
+- the threshold is compared to static size ESTIMATES, which are loose: a
+  scan is estimated from its compressed parquet size (a lineitem
+  projection reads as a few MB at sf0.1), and an inner join's output as
+  the product of its sides (a semi join's as its left side). So the
+  planner can pick an un-aggregated lineitem scan as a build side over a
+  joined dimension; builders order their joins so it cannot, and
+  ``tests/test_plan_shapes.py`` fails if any TPC-H query broadcasts a
+  lineitem scan with no aggregate in between;
 - aggregations are expressed declaratively so Catalyst plans
   partial→exchange→final hash aggregation (map-side combine);
 - top-k is ``orderBy().limit(k)`` which Spark plans as

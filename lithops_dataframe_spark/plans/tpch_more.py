@@ -2,7 +2,8 @@
 (adapted to the fixture schema: no commitdate/shipmode/comment columns) —
 each exercises a distinct plan shape the first four headliners don't:
 
-- q04-like: EXISTS decorrelation → left-semi join + aggregate.
+- q04-like: EXISTS decorrelation → per-order MAX, left-semi join +
+  aggregate.
 - q07-like: two independent dimension lineages joined to the same facts
   (supplier-nation × customer-nation volume matrix) with a disjunctive
   cross-nation predicate.
@@ -44,15 +45,30 @@ def _t(spark, sf_dir, name):
     """,
 )
 def q04_priority_with_late_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS → left-semi join (no fact duplication),
-    then a small-key aggregate."""
+    """TPC-H Q4 shape: EXISTS decorrelated through a per-order aggregate,
+    then a left-semi join and a small-key aggregate.
+
+    An order row has a line shipped after it iff its orderdate is before
+    the order's latest shipdate. lineitem is left-semi-joined to the
+    filtered quarter's order keys (the orders side is the build side) and
+    reduced to ``last_ship = MAX(l_shipdate)`` per order; orders then
+    left-semi-joins that aggregate on the one orderkey column with
+    ``o_orderdate < last_ship``. Semi joins keep the left side's rows as
+    they are, so duplicate order rows count as in the oracle. A direct
+    ``orders ⋉ lineitem`` would make the fact table the build side."""
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
+    keys = orders.select("o_orderkey")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    last = (
+        li.join(keys, li.l_orderkey == keys.o_orderkey, "left_semi")
+        .groupBy("l_orderkey")
+        .agg(F.max("l_shipdate").alias("last_ship"))
+    )
     hit = orders.join(
-        li,
-        (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
+        last,
+        (orders.o_orderkey == last.l_orderkey) & (orders.o_orderdate < last.last_ship),
         "left_semi",
     )
     return hit.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("order_count"))
@@ -80,13 +96,16 @@ def q07_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     (supplier→nation, customer→nation) with a disjunctive pair predicate.
 
     The pair disjunction spans both lineages so Catalyst can't factor it,
-    but its IMPLIED per-lineage constraint (each nation ∈ {N1, N2}) is
-    applied by hand BELOW the fact joins: customer and supplier are each
-    inner-joined to the 2-row filtered nation frame first, so the orders
-    join sees only ~2/N of customers and the lineitem join only ~2/N of
-    suppliers — at 100 TB the fact shuffle carries the nation-pair slice,
-    not the whole join (the q02-exponent trick, r5 verdict task 6). The
-    residual pair filter then runs on the already-reduced join output."""
+    but its implied per-lineage constraint (each nation ∈ {N1, N2}) is
+    applied BELOW the fact joins: supplier, customer, and orders through
+    customer, are each reduced by a left-semi join, so the lineitem joins
+    see only ~2/N of suppliers and orders. Spark estimates a semi join at
+    its left side's size but an inner join at the product of its sides,
+    so these semi-joined frames, not lineitem, are the static build sides.
+    The fact joins carry ``s_nationkey``/``c_nationkey``; the names are
+    attached afterwards from the hinted 2-row nation frames, with the same
+    multiplicity as the oracle's inner joins, and the residual pair filter
+    runs last."""
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
@@ -98,25 +117,22 @@ def q07_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cn = n.withColumnRenamed("n_name", "cust_nation").withColumnRenamed("n_nationkey", "cn_key")
     sn = n.withColumnRenamed("n_name", "supp_nation").withColumnRenamed("n_nationkey", "sn_key")
-    c2 = (
-        c.select("c_custkey", "c_nationkey")
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .select("c_custkey", "cust_nation")
+    s2 = s.select("s_suppkey", "s_nationkey").join(
+        F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"), "left_semi"
     )
-    s2 = (
-        s.select("s_suppkey", "s_nationkey")
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .select("s_suppkey", "supp_nation")
+    c2 = c.select("c_custkey", "c_nationkey").join(
+        F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"), "left_semi"
     )
-    o2 = (
-        o.select("o_orderkey", "o_custkey")
-        .join(c2, F.col("o_custkey") == F.col("c_custkey"))
-        .select("o_orderkey", "cust_nation")
+    o2 = o.select("o_orderkey", "o_custkey").join(
+        c2, F.col("o_custkey") == F.col("c_custkey"), "left_semi"
     )
     j = (
         li.select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
         .join(s2, li.l_suppkey == F.col("s_suppkey"))
         .join(o2, li.l_orderkey == F.col("o_orderkey"))
+        .join(c2, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
+        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
         .filter(
             ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
             | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
@@ -217,22 +233,27 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: IN-subquery over an aggregate (orders whose line
-    quantities sum past a threshold) → semi-join-shaped filter, then the
-    detail join re-aggregates. The `big` aggregate shuffles once on
-    orderkey and its output is small."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    quantities sum past a threshold), then the detail re-aggregate.
+
+    The `big` aggregate shuffles lineitem once on orderkey and keeps its
+    per-order ``tq = SUM(l_quantity)``; orders ⋈ big ⋈ customer is then
+    grouped on the five output keys with ``SUM(tq)``. The oracle's detail
+    join sums ``l_quantity`` over (order row, customer row, line) triples,
+    and a sum distributes over that product, so duplicate order or
+    customer rows give the same answer. lineitem is scanned once and
+    never joined; the final aggregate needs no exchange of its own, since
+    its input is already partitioned on orderkey."""
     big = (
-        li.groupBy("l_orderkey")
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("tq"))
         .filter(F.col("tq") > 150)
-        .select(F.col("l_orderkey").alias("big_orderkey"))
     )
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
-        o.join(big, o.o_orderkey == big.big_orderkey)
+        o.join(big, o.o_orderkey == big.l_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
         .groupBy(
             "c_custkey",
             "c_name",
@@ -240,7 +261,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderdate",
             F.round("o_totalprice", 2).alias("totalprice"),
         )
-        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
+        .agg(F.round(F.sum("tq"), 2).alias("total_qty"))
     )
 
 

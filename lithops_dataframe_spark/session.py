@@ -13,7 +13,12 @@ Scale notes (100 TB design):
   construction (region/nation, one-row scalars, hyperplanes, centroids) —
   SF-scaling tables are never hinted, because a hint overrides AQE's
   runtime size check and would force-broadcast a multi-TB customer table
-  at 100 TB.
+  at 100 TB. The static planner compares the threshold to estimates: a
+  scan's compressed parquet size and, for an inner join, the product of
+  its sides' estimates. A lineitem projection can therefore look smaller
+  than a joined dimension; the query builders order joins so the fact
+  table reaches a build side only through an aggregate, and
+  ``tests/test_plan_shapes.py`` enforces it for the TPC-H shapes.
 - Arrow enabled for every pandas-UDF exchange (the only Python↔JVM
   data path we allow in hot paths).
 - Timezone pinned to UTC so timestamp semantics match the DuckDB oracle.
